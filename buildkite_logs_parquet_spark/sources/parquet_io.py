@@ -18,7 +18,9 @@ accepted as utf8 or binary (query.go:282-291).
 
 from __future__ import annotations
 
+import functools
 import os
+from types import SimpleNamespace
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -43,25 +45,110 @@ def write_entries(
     ``filter_expr`` mirrors the reference's filtered export
     (parquet.go:290-341): a Column predicate or SQL string applied before
     the write.  ``single_file=True`` gives byte-level parity-style output
-    for small job logs; the default range-partitions on ``row_id`` so huge
-    logs write in parallel while keeping positional locality (each output
-    file covers a contiguous row range → row-group & file pruning for
-    seek/tail).
+    for small job logs.  The default range-partitions on ``row_id`` so huge
+    logs write in parallel while keeping positional locality: AQE sizes and
+    coalesces the range partitions (only adjacent ones merge), rows are
+    sorted within each, and ``target_rows_per_partition`` caps the rows per
+    output file (``maxRecordsPerFile``).  Every file therefore covers a
+    contiguous ``row_id`` range of at most that many rows → row-group and
+    file pruning for seek/tail.  The range exchange samples its input once;
+    nothing else runs before the write.
     """
     df = entries
     if filter_expr is not None:
         df = df.where(filter_expr)
     cols = (["row_id"] if "row_id" in df.columns else []) + CANONICAL_COLUMNS
     df = df.select(*cols)
+    writer_opts = {"compression": "zstd"}
     if "row_id" in df.columns:
         if single_file:
             df = df.coalesce(1).sortWithinPartitions("row_id")
         else:
-            n = max(1, df.count() // target_rows_per_partition)
-            df = df.repartitionByRange(n, "row_id").sortWithinPartitions("row_id")
+            df = df.repartitionByRange("row_id").sortWithinPartitions("row_id")
+            writer_opts["maxRecordsPerFile"] = str(target_rows_per_partition)
     elif single_file:
         df = df.coalesce(1)
-    df.write.mode("overwrite").option("compression", "zstd").parquet(path)
+    df.write.mode("overwrite").options(**writer_opts).parquet(path)
+
+
+def _hidden(name: str) -> bool:
+    """Spark's rule for the names a table read skips: ``.``-prefixed names
+    (checksums) and ``_``-prefixed ones (``_SUCCESS``, ``_temporary``)
+    other than ``key=value`` partition directories."""
+    return name.startswith(".") or (name.startswith("_") and "=" not in name)
+
+
+def _parquet_files(path: str) -> list[str]:
+    """Local data files of a Parquet table, sorted: ``path`` itself when it
+    is a file, else every ``*.parquet`` below it outside hidden names
+    (``_hidden``); empty when ``path`` does not exist."""
+    if os.path.isfile(path):
+        return [path]
+    files = []
+    for root, dirs, names in os.walk(path):
+        dirs[:] = [d for d in dirs if not _hidden(d)]
+        files += (
+            os.path.join(root, f)
+            for f in names
+            if f.endswith(".parquet") and not _hidden(f)
+        )
+    return sorted(files)
+
+
+@functools.cache
+def _footer_classes(jvm) -> SimpleNamespace:
+    """The JVM classes ``_footer_schema`` calls, resolved once per gateway
+    (each package step of a py4j lookup is a round trip; uncached they
+    cost as much as the footer read itself)."""
+    spark_pq = jvm.org.apache.spark.sql.execution.datasources.parquet
+    parquet = jvm.org.apache.parquet
+    return SimpleNamespace(
+        Path=jvm.org.apache.hadoop.fs.Path,
+        HadoopInputFile=parquet.hadoop.util.HadoopInputFile,
+        Footer=parquet.hadoop.Footer,
+        SKIP_ROW_GROUPS=parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS,
+        ParquetFooterReader=spark_pq.ParquetFooterReader,
+        ParquetFileFormat=spark_pq.ParquetFileFormat,
+        ParquetToSparkSchemaConverter=spark_pq.ParquetToSparkSchemaConverter,
+    )
+
+
+def _footer_schema(spark: SparkSession, path: str) -> T.StructType:
+    """Data schema of the Parquet table at ``path`` from one footer, read
+    on the driver.
+
+    ``spark.read.parquet`` infers it with a Spark job
+    (``mergeSchemasInParallel``) that reads the footer of the first data
+    file.  This reads that footer in-process through the same Spark
+    classes (``ParquetFooterReader`` without row groups, then
+    ``readSchemaFromFooter`` with a converter built from the session
+    conf), so ``nanosAsLong``/``binaryAsString`` and Spark's own row
+    metadata map as inference maps them.  Partition columns are not part
+    of the result; a read given this schema still discovers them.
+    """
+    J = _footer_classes(spark._jvm)
+    state = spark._jsparkSession.sessionState()
+    conf = state.newHadoopConf()
+    hp = J.Path(path)
+    fs = hp.getFileSystem(conf)
+    if not fs.exists(hp):
+        raise FileNotFoundError(f"no such path: {path}")
+    root = fs.makeQualified(hp).toString().rstrip("/")
+    files = fs.listFiles(hp, True)
+    while files.hasNext():
+        st = files.next()
+        rel = st.getPath().toString()[len(root):]
+        if any(_hidden(part) for part in rel.split("/")):
+            continue
+        footer = J.ParquetFooterReader.readFooter(
+            J.HadoopInputFile.fromStatus(st, conf), J.SKIP_ROW_GROUPS
+        )
+        schema = J.ParquetFileFormat.readSchemaFromFooter(
+            J.Footer(st.getPath(), footer),
+            J.ParquetToSparkSchemaConverter(state.conf()),
+        )
+        return T._parse_datatype_json_string(schema.json())
+    raise ValueError(f"no parquet files at {path}")
 
 
 def _attach_positional_row_id(df: DataFrame) -> DataFrame:
@@ -125,8 +212,11 @@ def read_entries(
     ``synthesize_row_id`` a file lacking ``row_id`` gets one derived from
     physical position (see ``_attach_positional_row_id``) so positional
     ops (seek/tail) work on reference-written files.
+
+    The schema comes from one footer read on the driver
+    (``_footer_schema``), so building the read starts no Spark job.
     """
-    df = spark.read.parquet(path)
+    df = spark.read.schema(_footer_schema(spark, path)).parquet(path)
     present = {f.name: f.dataType for f in df.schema.fields}
     for req in _REQUIRED:
         if req not in present:
@@ -186,26 +276,23 @@ def write_log_lake(
 
 def read_log_lake(spark: SparkSession, path: str) -> DataFrame:
     """Read the partitioned lake; partition columns come back as columns
-    and filters on them prune directories before any file is opened."""
-    return spark.read.parquet(path)
+    and filters on them prune directories before any file is opened.  The
+    data schema comes from one footer (``_footer_schema``), so building the
+    read starts no Spark job; the partition columns are still discovered
+    from the directory names."""
+    return spark.read.schema(_footer_schema(spark, path)).parquet(path)
 
 
 def file_info(path: str) -> dict:
     """Parquet metadata without reading data (query.go:358-396): row count,
     column count, file size, row-group count.  Uses footer metadata only;
     sums across part-files when ``path`` is a directory (the reference is
-    single-file; a directory is this engine's scale-out layout)."""
+    single-file; a directory is this engine's scale-out layout), searched
+    recursively so a partitioned lake counts too — its column count is the
+    data columns', as partition values live in directory names."""
     import pyarrow.parquet as pq
 
-    files: list[str]
-    if os.path.isdir(path):
-        files = sorted(
-            os.path.join(path, f)
-            for f in os.listdir(path)
-            if f.endswith(".parquet") and not f.startswith(".")
-        )
-    else:
-        files = [path]
+    files = _parquet_files(path) if os.path.isdir(path) else [path]
     if not files:
         raise ValueError(f"no parquet files at {path}")
     rows = 0
@@ -284,14 +371,7 @@ def column_size_report(spark: SparkSession, path: str) -> DataFrame:
     Output: ``(column, n_files, n_row_groups, compressed_bytes,
     uncompressed_bytes, ratio100)`` — ratio as an exact ×100 integer.
     """
-    import glob as _glob
-    import os as _os
-
-    files = sorted(
-        _glob.glob(_os.path.join(path, "**", "*.parquet"), recursive=True)
-    )
-    if _os.path.isfile(path):
-        files = [path]
+    files = _parquet_files(path)
     if not files:
         raise FileNotFoundError(f"no parquet files under {path}")
     sc = spark.sparkContext

@@ -209,3 +209,146 @@ def test_column_size_report(spark, tmp_path):
 
     with _pytest.raises(FileNotFoundError):
         column_size_report(spark, str(tmp_path / "missing"))
+
+
+def _lake_entries(spark):
+    rows = [
+        ("acme", "web", str(b), i, 1000 + i, f"line {i}", "", False, False, False, False)
+        for b in (1, 2)
+        for i in range(5)
+    ]
+    return spark.createDataFrame(
+        rows,
+        "org string, pipeline string, build string, row_id long, timestamp long,"
+        "content string, group string, has_timestamp boolean, is_command boolean,"
+        "is_group boolean, is_progress boolean",
+    )
+
+
+@pytest.mark.parametrize("kind", ["engine", "reference", "nanos", "lake"])
+def test_footer_schema_matches_inference(spark, entries, tmp_path, kind):
+    """The driver-side footer read gives exactly the data schema that
+    ``spark.read.parquet`` infers with a Spark job."""
+    from buildkite_logs_parquet_spark.sources.parquet_io import (
+        _footer_schema,
+        read_log_lake,
+        write_log_lake,
+    )
+
+    p = str(tmp_path / kind)
+    if kind == "engine":
+        write_entries(entries, p)
+    elif kind == "reference":
+        # reference-style: binary strings, no row_id, legacy extra column
+        t = pa.table(
+            {
+                "timestamp": pa.array([1, 2], pa.int64()),
+                "content": pa.array([b"a", b"b"], pa.binary()),
+                "group": pa.array([b"g", None], pa.binary()),
+                "has_timestamp": pa.array([True, False]),
+                "raw_line_size": pa.array([10, 20], pa.int64()),
+            }
+        )
+        pq.write_table(t, p)
+    elif kind == "nanos":
+        t = pa.table(
+            {
+                "timestamp": pa.array([1, 2], pa.int64()),
+                "content": pa.array(["a", "b"]),
+                "at": pa.array([1, 2], pa.timestamp("ns")),
+            }
+        )
+        pq.write_table(t, p)
+    else:
+        write_log_lake(_lake_entries(spark), p)
+    inferred = spark.read.parquet(p).schema
+    given = spark.read.schema(_footer_schema(spark, p)).parquet(p).schema
+    # a file relation reads every column as nullable either way
+    assert given == inferred
+    if kind == "lake":
+        assert read_log_lake(spark, p).schema == inferred
+        assert [f.name for f in inferred][-3:] == ["org", "pipeline", "build"]
+
+
+def test_read_entries_starts_no_job(spark, entries, tmp_path):
+    from buildkite_logs_parquet_spark.sources.parquet_io import (
+        read_log_lake,
+        write_log_lake,
+    )
+
+    path = str(tmp_path / "t.parquet")
+    write_entries(entries, path)
+    lake = str(tmp_path / "lake")
+    write_log_lake(_lake_entries(spark), lake)
+    sc = spark.sparkContext
+    sc.setJobGroup("read-no-job", "building reads only")
+    try:
+        read_entries(spark, path)
+        read_log_lake(spark, lake)
+        assert list(sc.statusTracker().getJobIdsForGroup("read-no-job")) == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    empty = tmp_path / "empty"
+    empty.mkdir()
+    (empty / "_SUCCESS").write_bytes(b"")
+    with pytest.raises(ValueError, match="no parquet files"):
+        read_entries(spark, str(empty))
+
+
+@pytest.mark.parametrize("coalesce", [True, False])
+def test_range_layout_files_are_disjoint_and_capped(spark, tmp_path, coalesce):
+    """Every file of the range layout covers its own contiguous ``row_id``
+    range and holds at most ``target_rows_per_partition`` rows, whether AQE
+    merges the range partitions into one write task or leaves several."""
+    n, cap = 7_000, 1_000
+    lines = spark.createDataFrame(
+        [("f", i, f"{OSC}{1000 + i}{BEL}line {i}") for i in range(n)],
+        "file string, line_no long, raw string",
+    )
+    entries = entries_view(parse_log_lines(lines, file_col="file"))
+    path = str(tmp_path / "ranged.parquet")
+    key = "spark.sql.adaptive.coalescePartitions.enabled"
+    old = spark.conf.get(key)
+    spark.conf.set(key, str(coalesce).lower())
+    try:
+        write_entries(entries, path, target_rows_per_partition=cap)
+    finally:
+        spark.conf.set(key, old)
+    spans = []
+    for f in sorted(os.listdir(path)):
+        if not f.endswith(".parquet"):
+            continue
+        md = pq.ParquetFile(os.path.join(path, f)).metadata
+        assert 0 < md.num_rows <= cap
+        rid = md.schema.names.index("row_id")
+        stats = [md.row_group(g).column(rid).statistics for g in range(md.num_row_groups)]
+        spans.append((min(s.min for s in stats), max(s.max for s in stats), md.num_rows))
+    spans.sort()
+    assert len(spans) >= n // cap
+    assert sum(k for _, _, k in spans) == n
+    assert all(hi - lo + 1 == k for lo, hi, k in spans)  # contiguous
+    assert all(hi < nlo for (_, hi, _), (nlo, _, _) in zip(spans, spans[1:]))
+
+
+def test_file_info_partitioned_lake(spark, tmp_path):
+    from buildkite_logs_parquet_spark.sources.parquet_io import write_log_lake
+
+    lake = str(tmp_path / "lake")
+    write_log_lake(_lake_entries(spark), lake)
+    # leftovers a reader must skip, as Spark's own listing does
+    junk = tmp_path / "lake" / "_temporary"
+    junk.mkdir()
+    (junk / "part-0.parquet").write_bytes(b"not parquet")
+    info = file_info(lake)
+    assert info["row_count"] == 10
+    assert info["column_count"] == 8  # data columns; partitions are dirs
+    assert info["num_row_groups"] == 2  # one file per build
+    parts = [
+        os.path.join(r, f)
+        for r, _, fs in os.walk(lake)
+        if "_temporary" not in r
+        for f in fs
+        if f.endswith(".parquet")
+    ]
+    assert info["file_size_bytes"] == sum(os.path.getsize(f) for f in parts)
